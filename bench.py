@@ -456,14 +456,14 @@ def main() -> None:
     ) as f:
         json.dump(payload, f, indent=1)
         f.write("\n")
-    spark.stop()
     # r15 bench-contract hardening (VERDICT r14 #4): the r13 one-line JSON
     # was truncated by the driver's tail capture, losing the whole
-    # round-over-round comparison. The printed line now carries per-query
+    # round-over-round comparison. The printed line carries per-query
     # MINS plus the scalar sentinels only — O(queries) long — and prints
-    # STRICTLY LAST (after spark.stop(), so no trailing executor chatter);
-    # the spreads/box snapshots stay in the committed BENCH_full.json.
-    # No timing methodology changed: same queries, same min-of-RUNS.
+    # STRICTLY LAST, after spark.stop() so no executor chatter trails it;
+    # the finally makes a failing stop unable to swallow the line. The
+    # spreads/box snapshots stay in the committed BENCH_full.json. No
+    # timing methodology changed: same queries, same min-of-RUNS.
     slim = {
         k: v
         for k, v in payload.items()
@@ -477,8 +477,11 @@ def main() -> None:
             "box_end",
         )
     }
-    sys.stdout.flush()
-    print(json.dumps(slim))
+    try:
+        spark.stop()
+    finally:
+        sys.stdout.flush()
+        print(json.dumps(slim))
 
 
 if __name__ == "__main__":

@@ -43,6 +43,12 @@ class CacheSlot:
         ``materialize=False``: the first job fills the cache in-flight and
         the extra count job is pure overhead (~40% of the MinHash pipeline
         at bench scale).
+
+        A final global ``orderBy`` is such a case even with ONE consumer:
+        a global sort computes its child twice, once in the
+        range-partition sampling job and again in the map stage. Holding
+        a costly child lazily lets the sampling job fill the cache and the
+        map stage read it.
         """
         df.persist()
         if materialize:

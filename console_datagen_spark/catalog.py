@@ -9,8 +9,10 @@ predicate pushdown / column pruning reach the parquet reader.
 from __future__ import annotations
 
 import os
+import weakref
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql.types import StructType
 
 from .session import ensure_engine_conf
 
@@ -34,8 +36,41 @@ def table_path(sf_dir: str, name: str) -> str:
     return f"{sf_dir.rstrip('/')}/{name}.parquet"
 
 
+# parquet reader confs that change the inferred schema; nanosAsLong is the
+# one ensure_engine_conf sets
+_SCHEMA_CONFS = (
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+)
+_schemas: "weakref.WeakKeyDictionary[SparkSession, dict[tuple, StructType]]" = (
+    weakref.WeakKeyDictionary()
+)
+
+
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return spark.read.parquet(table_path(sf_dir, name))
+    """Scan one fixture table, inferring its schema once per file version.
+
+    Parquet schema inference reads a footer in a Spark job — the largest
+    share of a short query's catalog time. The inferred schema is cached
+    per session under (path, size, mtime_ns, the reader confs above), so
+    a rewritten file (a Spark-written directory gets a new mtime with its
+    new part files) or a changed conf re-infers. The cache holds schemas
+    only: every call still lists and scans the files, and no data or
+    result is cached.
+    """
+    path = table_path(sf_dir, name)
+    st = os.stat(path)
+    key = (path, st.st_size, st.st_mtime_ns,
+           *(spark.conf.get(k, None) for k in _SCHEMA_CONFS))
+    known = _schemas.setdefault(spark, {})
+    schema = known.get(key)
+    if schema is not None:
+        return spark.read.schema(schema).parquet(path)
+    df = spark.read.parquet(path)
+    known[key] = df.schema
+    return df
 
 
 def register_views(

@@ -13,6 +13,9 @@ becomes competitive — see operators/similarity.py for the trade-off note.
 
 from __future__ import annotations
 
+import math
+from collections.abc import Iterable
+
 from pyspark.sql import Column, functions as F
 
 
@@ -27,6 +30,43 @@ def dot(a: Column, b: Column) -> Column:
         F.zip_with(a, b, lambda x, y: x * y),
         F.lit(0.0).cast("double"),
         lambda acc, v: acc + v,
+    )
+
+
+def sql_double_array(values: Iterable[float]) -> str:
+    """SQL text of a literal ``array<double>``: ``array(0.12D, -3.0D, ...)``.
+
+    ``repr(float)`` is the shortest string that round-trips, and Spark
+    parses a ``D`` literal with Java's correctly rounded
+    ``Double.parseDouble``, so every element is bit-identical to
+    ``F.lit(x)`` (``-0.0`` and subnormals included). Non-finite values
+    have no literal spelling and raise ``ValueError``.
+    """
+    out = []
+    for x in values:
+        x = float(x)
+        if not math.isfinite(x):
+            raise ValueError(f"non-finite element {x!r} in a literal vector")
+        out.append(repr(x) + "D")
+    return "array(" + ", ".join(out) + ")"
+
+
+def sql_int_array(values: Iterable[int]) -> str:
+    """SQL text of a literal integer array: ``array(3, -17, ...)``."""
+    return "array(" + ", ".join(str(int(x)) for x in values) + ")"
+
+
+def lit_dot(col: str, values: Iterable[float]) -> Column:
+    """``dot(F.col(col), <literal vector>)`` parsed from ONE SQL string.
+
+    Same left-fold in double precision as ``dot``, so results are
+    bit-identical. Spelling the vector as ``F.array(*[F.lit(x) ...])``
+    costs py4j round trips per element: a large share of the driver-side
+    build time of plans that inline a dozen 64-dim vectors.
+    """
+    return F.expr(
+        f"aggregate(zip_with({col}, {sql_double_array(values)}, (x, y) -> x * y), "
+        "CAST(0.0 AS DOUBLE), (acc, t) -> acc + t)"
     )
 
 

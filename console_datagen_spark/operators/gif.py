@@ -113,6 +113,10 @@ def _lzw_encode(indices: bytes, min_code_size: int) -> bytes:
             width = min_code_size + 1
         cur = bytes([k])
     w.write(table[cur], width)
+    # the decoder adds one more entry on reading that last code; when the
+    # entry fills the current width it reads the EOI one bit wider
+    if next_code == 1 << width and width < 12:
+        width += 1
     w.write(eoi, width)
     return w.flush()
 

@@ -28,7 +28,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window, functions as F
 
 from ..functions.spread import spread
-from ..functions.vector import cosine, dot, to_double_vec
+from ..functions.vector import cosine, dot, lit_dot, to_double_vec
 
 
 def with_norm(embeddings: DataFrame) -> DataFrame:
@@ -277,7 +277,8 @@ def lsh_buckets_multi(
 
     The hyperplane vectors are collected to the driver (one tiny collect —
     #bands × #planes rows, the same O(small) class as k-means centroids)
-    and inlined as literal arrays, so every band's bucket is a plain
+    and inlined as literal arrays (one SQL-text expression per plane, see
+    ``lit_dot``), so every band's bucket is a plain
     column expression: one corpus scan, zero joins, zero shuffles. The
     per-band rows come from computing each band's bucket as its own
     column, then ``stack``-unpivoting — the generator runs over scalar
@@ -303,8 +304,7 @@ def lsh_buckets_multi(
     def band_bucket(planes: tuple[int, ...]):
         bucket = F.lit(0).cast("long")
         for bit, pid in enumerate(planes):
-            lit_plane = F.array(*[F.lit(float(x)) for x in plane_vec[pid]])
-            sgn = F.when(dot(F.col("v"), lit_plane) > 0, 1 << bit).otherwise(0)
+            sgn = F.when(lit_dot("v", plane_vec[pid]) > 0, 1 << bit).otherwise(0)
             bucket = bucket + sgn.cast("long")
         return bucket
 

@@ -37,9 +37,7 @@ is covered at least once (tokens in positions k·S+1..k·S+W).
 
 from __future__ import annotations
 
-from ..caching import CacheSlot
-from ..catalog import register_views
-from .registry import df_query, sql_query
+from .registry import sql_query
 
 DOCS = ("documents",)
 
@@ -380,26 +378,9 @@ GROUP BY source, CAST(FLOOR(prefix / {_BUDGET}.0) AS BIGINT)
 ORDER BY source, bin
 """
 
-_e2e_cache = CacheSlot()
-
-
-def _e2e(spark, sf_dir):
-    register_views(spark, sf_dir, DOCS)
-    _e2e_cache.release()
-    # eager hold: quality and sh are parallel branches of the one final
-    # job and would race to rebuild the scan+dedup+split pipeline cold
-    base = _e2e_cache.hold(
-        spark.sql(
-            _E2E_BASE_SPARK.format(par=spark.sparkContext.defaultParallelism)
-        )
-    )
-    base.createOrReplaceTempView("e2e_base")
-    return spark.sql(_E2E_TAIL_SPARK)
-
-
-df_query(
+sql_query(
     "pipeline_end_to_end",
-    _e2e,
+    _E2E_SPARK,
     oracle=_E2E_DUCK,
     tables=DOCS,
     tags=("pipeline", "dedup", "quality", "decontamination", "sampling",
@@ -407,8 +388,7 @@ df_query(
     doc="the full corpus-to-trainer DAG in one plan: exact dedup -> "
     "quality gate -> 8-gram decontamination -> per-language mix sample "
     f"-> {_W}-token chunking -> {_BUDGET}-token hierarchical bin packing "
-    "per source; bins hash-certified against the plain-window oracle "
-    "(base tokenize materialized once — r15)",
+    "per source; bins hash-certified against the plain-window oracle",
 )
 
 

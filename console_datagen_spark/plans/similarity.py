@@ -8,10 +8,11 @@ and only ids/ranks are emitted (FIXTURES.md: float scores are never hashed).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import Column, DataFrame, SparkSession, functions as F
 
 from ..catalog import register_views
 from ..functions.hashing import HASH_PRIME as _HASH_PRIME
+from ..functions.vector import sql_int_array
 from ..operators import similarity as S
 from .registry import CacheSlot, df_query, sql_query
 
@@ -236,9 +237,16 @@ def _emb_dups(spark: SparkSession, sf_dir: str) -> DataFrame:
     cand = _emb_cache.hold(
         S.candidate_pairs_from_buckets(buckets), materialize=False
     )
-    return S.embedding_dup_pairs_lsh(
-        emb, bands=_DUP_BANDS, threshold=0.4, candidates=cand, normed=normed
-    ).orderBy("vec_a", "vec_b")
+    # the verify join is held too: the final global sort runs it twice
+    # otherwise (range-partition sampling job + the map stage); lazily
+    # held, the sampling job fills the cache and the map stage reads it
+    pairs = _emb_cache.hold(
+        S.embedding_dup_pairs_lsh(
+            emb, bands=_DUP_BANDS, threshold=0.4, candidates=cand, normed=normed
+        ),
+        materialize=False,
+    )
+    return pairs.orderBy("vec_a", "vec_b")
 
 
 # bit index per plane = rank of the plane's vec_id within its band — the
@@ -1629,21 +1637,26 @@ _KC_K = 6
 _kc_cache = CacheSlot()
 
 
-def _d2q(a, b):
-    """Integer squared-L2 between int8-quantized vectors (exact)."""
-    return F.aggregate(
-        F.zip_with(a, b, lambda x, y: ((x - y) * (x - y)).cast("long")),
-        F.lit(0).cast("long"),
-        lambda acc, v: acc + v,
+def _d2q(cq) -> Column:
+    """Integer squared-L2 from each row's int8-quantized ``q`` to the
+    literal center ``cq`` (exact), parsed from one SQL string."""
+    return F.expr(
+        f"aggregate(zip_with(q, {sql_int_array(cq)}, "
+        "(x, y) -> CAST((x - y) * (x - y) AS BIGINT)), "
+        "CAST(0 AS BIGINT), (acc, t) -> acc + t)"
     )
 
 
 def _kcenter(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..functions.vector import absmax_scale, quantize_int8, to_double_vec
+    from ..tools import plan_probe
 
     _kc_cache.release()
     emb = register_views(spark, sf_dir, EMB)["embeddings"]
     v = to_double_vec(F.col("embedding"))
+    # lazy: the seed's orderBy().first() below scans every partition, so
+    # it fills the cache in-flight and an eager count would be a pure
+    # extra job
     q = _kc_cache.hold(
         emb.select(
             "vec_id",
@@ -1651,49 +1664,44 @@ def _kcenter(spark: SparkSession, sf_dir: str) -> DataFrame:
             quantize_int8(v, absmax_scale(v)).alias("q"),
         )
         .where(F.col("scale") > 0)
-        .select("vec_id", "q")
+        .select("vec_id", "q"),
+        materialize=False,
     )
-
-    def lit_vec(cq):
-        return F.array(*[F.lit(int(x)) for x in cq])
 
     seed = q.orderBy("vec_id").first()
     centers = [(seed["vec_id"], list(seed["q"]))]
-    # r14 opt: carry the running min-distance column (the classic Gonzalez
-    # distance array) instead of re-evaluating every prior center each
-    # round. Round i then evaluates ONE zip_with/aggregate distance per row
-    # (was i of them — O(k) total evals instead of O(k²)) and each round's
-    # plan stays constant-size (the literal-center expression trees
-    # dominated planning+codegen time at bench scale). The lazily-held
-    # frame is materialized by the round's own top-1 job; mind values are
-    # bit-identical (least() over the same exact integers), so the argmax
-    # chain — and therefore every downstream value — is unchanged.
-    cur = q
-    for i in range(1, _KC_K):
-        d_new = _d2q(F.col("q"), lit_vec(centers[-1][1]))
-        mind = d_new if i == 1 else F.least(F.col("mind"), d_new)
-        cur = _kc_cache.hold(
-            cur.select("vec_id", "q", mind.alias("mind")), materialize=False
-        )
-        from ..tools import plan_probe
 
-        plan_probe(f"kcenter_round{i}", cur)
+    def fold(frame: DataFrame, i: int) -> DataFrame:
+        """Fold center ``i`` into the running (mind, step) columns."""
+        d = _d2q(centers[i][1])
+        if i == 0:
+            return frame.select("vec_id", "q", d.alias("mind"), F.lit(0).alias("step"))
+        return frame.select(
+            "vec_id",
+            "q",
+            F.least(F.col("mind"), d).alias("mind"),
+            F.when(d < F.col("mind"), F.lit(i)).otherwise(F.col("step")).alias("step"),
+        )
+
+    # Each round carries the classic Gonzalez distance array as two
+    # columns: ``mind`` (distance to the nearest center so far) and
+    # ``step`` (that center's index). A round folds in only the newest
+    # center — one distance per row, a constant-size plan per round —
+    # and ``step`` moves on a strict ``<`` only, so it names the FIRST
+    # center attaining the min, the oracle CASE's tie rule. Each round's
+    # frame is held lazily and filled by that round's own top-1 job; the
+    # final assignment folds just the last center over the last held
+    # round. Distances are exact integers, so mind, step and the argmax
+    # chain equal the oracle's unrolled all-centers form bit for bit.
+    cur = q
+    for i in range(_KC_K - 1):
+        cur = _kc_cache.hold(fold(cur, i), materialize=False)
+        plan_probe(f"kcenter_round{i + 1}", cur)
         nxt = cur.orderBy(F.col("mind").desc(), "vec_id").first()
         centers.append((nxt["vec_id"], list(nxt["q"])))
 
-    dcols = [
-        _d2q(F.col("q"), lit_vec(cq)).alias(f"d{i}")
-        for i, (_, cq) in enumerate(centers)
-    ]
-    scored = q.select("vec_id", *dcols).withColumn(
-        "mind", F.least(*[F.col(f"d{i}") for i in range(_KC_K)])
-    )
-    # first center index attaining the min — matches the oracle's CASE
-    step = F.coalesce(
-        *[F.when(F.col(f"d{i}") == F.col("mind"), F.lit(i)) for i in range(_KC_K)]
-    )
     assigned = (
-        scored.withColumn("step", step)
+        fold(cur, _KC_K - 1)
         .groupBy("step")
         .agg(F.count("*").alias("n_assigned"), F.max("mind").alias("radius"))
     )

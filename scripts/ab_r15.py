@@ -5,8 +5,10 @@ Variant pairs (old spelling replicated inline vs the committed new one):
                        degree-ordered orientation
   sc_old  / sc_new   — pipeline_select_compose: two scan+split passes vs
                        the shared held token frame
-  e2e_old / e2e_new  — pipeline_end_to_end: pure-CTE SQL (base inlined
-                       twice) vs materialized base + SQL tail
+  e2e_old / e2e_new  — pipeline_end_to_end: the pure-CTE SQL run directly
+                       vs through the registry (the materialized-base
+                       rewrite lost this A/B and was removed, so both
+                       now run the same plan)
 
 Old variants reproduce the r14 plan spelling over the SAME current
 operators, so the pair differs only in the rewrite under test. Prints
@@ -28,6 +30,7 @@ import bench
 from console_datagen_spark.caching import CacheSlot, release_all_cache_slots
 from console_datagen_spark.catalog import register_views
 from console_datagen_spark.plans import all_queries
+from console_datagen_spark.plans.chunking import _E2E_SPARK
 from console_datagen_spark.plans.dedup import DOCS, _minhash_pairs_raw
 from console_datagen_spark.session import get_spark
 
@@ -228,37 +231,11 @@ def sc_old(spark):
     )
 
 
-# the r14 pure-CTE e2e SQL, __PAR__ pre-substituted at session start
-_E2E_OLD_SQL = None
-
-
-def _e2e_old_sql(spark):
-    global _E2E_OLD_SQL
-    if _E2E_OLD_SQL is None:
-        import subprocess
-
-        src = subprocess.run(
-            ["git", "show", "a751a7d:console_datagen_spark/plans/chunking.py"],
-            capture_output=True,
-            text=True,
-            cwd=os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
-        ).stdout
-        ns: dict = {}
-        head = src.split("_E2E_SPARK = f", 1)
-        pre = (
-            "_S, _W, _BUDGET, _BLOCK = 48, 64, 2048, 1000\n"
-            "_E2E_SPARK = f" + head[1].split('"""\n\n_E2E_DUCK')[0] + '"""\n'
-        )
-        exec(pre, ns)  # noqa: S102 — replaying our own committed source
-        _E2E_OLD_SQL = ns["_E2E_SPARK"].replace(
-            "__PAR__", str(spark.sparkContext.defaultParallelism)
-        )
-    return _E2E_OLD_SQL
-
-
 def e2e_old(spark):
     register_views(spark, SF, DOCS)
-    return spark.sql(_e2e_old_sql(spark))
+    return spark.sql(
+        _E2E_SPARK.replace("__PAR__", str(spark.sparkContext.defaultParallelism))
+    )
 
 
 def main():

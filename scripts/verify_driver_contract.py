@@ -6,9 +6,15 @@ the lenient normalizer (diagnostics) and the driver-faithful strict_canon
 (value-hash gate) from tests/test_oracle.py. Exit 0 only if all match both
 ways — this is the (scale, canonicalizer) point the driver actually grades.
 """
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
+# Python workers import the engine too, from any working directory
+os.environ["PYTHONPATH"] = os.pathsep.join(
+    p for p in (ROOT, os.environ.get("PYTHONPATH")) if p
+)
 
 import duckdb
 import pandas as pd

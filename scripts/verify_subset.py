@@ -7,9 +7,15 @@ full verify_driver_contract.py run.
 Usage: python scripts/verify_subset.py [--sf DIR] name [name ...]
 """
 
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
+# Python workers import the engine too, from any working directory
+os.environ["PYTHONPATH"] = os.pathsep.join(
+    p for p in (ROOT, os.environ.get("PYTHONPATH")) if p
+)
 
 import duckdb
 import pandas as pd

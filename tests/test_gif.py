@@ -246,3 +246,14 @@ def test_lzw_kwkwk_run():
 
     idx = b"\x01" * 5000
     assert _lzw_decode(_lzw_encode(idx, 2), 2, len(idx)) == idx
+
+
+def test_lzw_eoi_width_after_last_code_fills_table_width():
+    # on reading the last data code the decoder adds one more table entry;
+    # when that entry fills the current code width it reads the EOI one bit
+    # wider, so the encoder must write it wider too (a 19-symbol ramp and a
+    # 56-zero run at min code size 2 end exactly there)
+    from console_datagen_spark.operators.gif import _lzw_decode, _lzw_encode
+
+    for idx in (bytes(i % 4 for i in range(19)), bytes(56)):
+        assert _lzw_decode(_lzw_encode(idx, 2), 2, len(idx)) == idx
